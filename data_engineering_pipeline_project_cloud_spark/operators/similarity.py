@@ -19,6 +19,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..caching import scoped_persist
+from ..frames import local_frame
 
 
 def _dot(a: Column, b: Column) -> Column:
@@ -462,7 +463,8 @@ def kmeans_centroids(emb: DataFrame, n_cells: int = 16, iters: int = 2,
     # codebook collect below)
     probe = emb.select(F.size(F.col(vec_col)).alias("d")).first()
     if probe is None:  # empty input: no vectors, no codebook
-        return emb.sparkSession.createDataFrame(
+        return local_frame(
+            emb.sparkSession,
             [], schema="cell_id long, centroid array<double>")
     dim = probe["d"]
     cents = (emb.filter(F.col(id_col) < n_cells)
@@ -492,7 +494,8 @@ def kmeans_centroids(emb: DataFrame, n_cells: int = 16, iters: int = 2,
         # (the nested-broadcast lineage multiplies job count per
         # iteration).  This is the offline-codebook checkpoint every
         # production IVF build does.
-        cents = emb.sparkSession.createDataFrame(
+        cents = local_frame(
+            emb.sparkSession,
             cents.collect(), schema="cell_id long, centroid array<double>")
     return cents
 
@@ -596,7 +599,8 @@ def ivf_ann_topk(emb: DataFrame, query_ids: list[int], k: int = 5,
             raise ValueError(
                 f"no query id of {sorted(query_ids)} resolved in "
                 f"{id_col}: empty probe set")
-        probes = F.broadcast(emb.sparkSession.createDataFrame(
+        probes = F.broadcast(local_frame(
+            emb.sparkSession,
             probe_rows,
             schema="query_id long, qv array<double>, cell_id long"))
         cand = cand.withColumn("cell_id", F.col("cell_id").cast("long"))
@@ -823,7 +827,8 @@ def pq_codebooks(emb: DataFrame, m: int = 4, k: int = 16, iters: int = 2,
                             .alias("centroid"))).collect()
         # bounded codebook checkpoint (m·k·sub doubles): the next pass
         # broadcasts literal data instead of replaying this pass
-        cents = spark.createDataFrame(
+        cents = local_frame(
+            spark,
             [(r["sub_id"], r["cell_id"], list(r["centroid"]))
              for r in rows],
             schema="sub_id int, cell_id long, centroid array<double>")
@@ -950,7 +955,8 @@ def pq_ann_topk(emb: DataFrame, query_ids: list[int],
                 float(sum((a - c) ** 2 for a, c in zip(qs, cent)))
                 for cent in book])
         tables.append((int(qid), per_sub))
-    tdf = F.broadcast(emb.sparkSession.createDataFrame(
+    tdf = F.broadcast(local_frame(
+        emb.sparkSession,
         tables, schema="query_id long, adc array<array<double>>"))
     total = None
     for j in range(m):
@@ -975,7 +981,8 @@ def pq_ann_topk(emb: DataFrame, query_ids: list[int],
                 ((-sum(a * c for a, c in zip(qv, cent)), cid)
                  for cid, cent in crows))[:nprobe]
             probe_pairs += [(int(qid), cid) for _, cid in ranked]
-        probe_df = F.broadcast(emb.sparkSession.createDataFrame(
+        probe_df = F.broadcast(local_frame(
+            emb.sparkSession,
             probe_pairs, schema="query_id long, cell_id long"))
         coded = codes if indexed else codes.join(
             cells.select(F.col(id_col), F.col("cell_id")), id_col)
@@ -1019,7 +1026,8 @@ def pq_ann_topk(emb: DataFrame, query_ids: list[int],
     # five-line re-application of the probed-cell collect above.
     cand_vecs = emb.select(F.col(id_col).alias("candidate_id"),
                            F.col(vec_col).alias("__cv"))
-    qvec_df = F.broadcast(emb.sparkSession.createDataFrame(
+    qvec_df = F.broadcast(local_frame(
+        emb.sparkSession,
         [(int(q), [float(x) for x in v]) for q, v in qrows.items()],
         schema="query_id long, __qv array<double>"))
     exact = (F.broadcast(shortlist.select("query_id", "candidate_id"))

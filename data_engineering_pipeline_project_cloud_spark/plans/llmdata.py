@@ -13,6 +13,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..caching import scoped_persist
+from ..frames import local_frame
 from ..operators import dedup as dd
 from ..operators import similarity as sim
 from ..operators import textstats as tx
@@ -273,7 +274,8 @@ def prefit_ivf_codebook(spark: SparkSession, sf_dir: str) -> DataFrame:
                                      assume_unit=True)
         _IVF_CODEBOOKS[key] = [
             (r["cell_id"], list(r["centroid"])) for r in cents.collect()]
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         _IVF_CODEBOOKS[key], schema="cell_id long, centroid array<double>")
 
 
@@ -449,7 +451,8 @@ def bpe_merge_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     global); the table is checked against a from-scratch Python BPE
     reference in tests/test_bpe.py."""
     rows = [(r, l, rt, n) for r, l, rt, n in prefit_bpe_merges(spark, sf_dir)]
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows, schema="rank int, left_unit string, right_unit string,"
                      " pair_freq long")
 

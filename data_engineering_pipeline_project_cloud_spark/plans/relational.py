@@ -13,6 +13,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..caching import scoped_persist
+from ..frames import local_frame
 from ..functions import money, portable_hash64
 from ..operators import relational as rel
 from ..operators.sketches import HLL_EST_NUM
@@ -216,7 +217,8 @@ def range_join_value_tiers(spark: SparkSession, sf_dir: str) -> DataFrame:
     big-big range join would instead be bucketed by range (see
     operators/asof.py for that pattern)."""
     ev = load_table(spark, sf_dir, "events")
-    tiers = spark.createDataFrame(
+    tiers = local_frame(
+        spark,
         [("t0", 0.0, 100.0), ("t1", 100.0, 200.0), ("t2", 200.0, 300.0),
          ("t3", 300.0, 400.0), ("t4", 400.0, 1000.0)],
         "tier string, lo double, hi double")
@@ -1613,8 +1615,8 @@ def manifest_drop_column(spark: SparkSession, sf_dir: str) -> DataFrame:
         write_manifest_table(nat.coalesce(1), path, ["n_nationkey"])
         drop_column_from_manifest(path, "n_regionkey")
         write_frame(
-            spark.createDataFrame([(100, "NEWLAND")],
-                                  "n_nationkey long, n_name string")
+            local_frame(spark, [(100, "NEWLAND")],
+                        "n_nationkey long, n_name string")
             .coalesce(1), path, "append", statCols="n_nationkey")
 
     path = scoped_scratch("manifest_dropcol_nation", sf_dir, build)
@@ -1637,7 +1639,8 @@ def manifest_table_history(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     path = _merge_orders_path(spark, sf_dir)
     hist = manifest_history(path)
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(h["version"], h["n_live_rows"], h["n_dv_rows"])
          for h in hist],
         "version int, n_live_rows long, n_dv_rows long")
@@ -2457,7 +2460,7 @@ def manifest_metadata_count(spark: SparkSession,
 
     tmp = scoped_scratch("manifest_count_orders", sf_dir, build)
     n = count_manifest(tmp)
-    return spark.createDataFrame([(n,)], "n_rows long")
+    return local_frame(spark, [(n,)], "n_rows long")
 
 
 def manifest_incremental_optimize(spark: SparkSession,
@@ -2624,7 +2627,7 @@ def manifest_operation_history(spark: SparkSession,
         drop_table_constraint(path, "k")                         # v4
         drop_column_from_manifest(path, "r")                     # v5
         delete_vectors_from_manifest(
-            spark.createDataFrame([(3,)], "k long"), path, ["k"],
+            local_frame(spark, [(3,)], "k long"), path, ["k"],
             ["k"])                                               # v6
         compact_manifest(spark, path, ["k"], 10**9)              # v7
         restore_manifest(path, 5)                                # v8
@@ -2632,7 +2635,7 @@ def manifest_operation_history(spark: SparkSession,
     tmp = scoped_scratch("manifest_ops_nation", sf_dir, build)
     rows = [(o["version"], o["operation"])
             for o in manifest_operations(tmp)]
-    return (spark.createDataFrame(rows, "version long, operation string")
+    return (local_frame(spark, rows, "version long, operation string")
             .orderBy("version"))
 
 

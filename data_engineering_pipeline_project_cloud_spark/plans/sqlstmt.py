@@ -16,6 +16,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..frames import local_frame
 from ..sources import load_table
 from ..sources.manifest_source import (
     load_manifest,
@@ -564,10 +565,10 @@ def dv_delete_mask_debt(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Accumulated deletion-vector debt (round 10 — VERDICT r9 task
     5): three successive merge-on-read DELETEs mask positions in the
     SAME files, so each later delete must exclude every earlier
-    mask's positions.  The exclusion set now expands EXECUTOR-side
-    (``delete_where_dv``'s mapInPandas decode) — driver planning is
-    O(masked files), flat in the debt — and a hash-green row proves
-    the masks compose without resurrection or double-delete."""
+    mask's positions.  The exclusion set is decoded driver-side from
+    the numpy bitmaps (``_dv_exclusion``, shared with the read path)
+    and shipped to the JVM as one Arrow frame — and a hash-green row
+    proves the masks compose without resurrection or double-delete."""
     register(spark)
 
     def build(root: str) -> None:
@@ -727,7 +728,8 @@ def manifest_identity_insert(spark: SparkSession,
                         .sortWithinPartitions("o_orderkey"),
                         path, "append", statCols="o_orderkey")
         # BY DEFAULT accepts explicit values (no high-water move)
-        explicit = spark.createDataFrame(
+        explicit = local_frame(
+            spark,
             [(-1, 1_000_000_001, "X", 1.0),
              (-2, 1_000_000_002, "X", 2.0)],
             "id BIGINT, o_orderkey BIGINT, status STRING, "
@@ -826,7 +828,8 @@ def manifest_stats_minmax(spark: SparkSession,
         raise AssertionError(
             "expected the metadata fast path to serve a DV-free, "
             f"stat-tracked table (got {source!r})")
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(mm["o_orderkey"]["min"], mm["o_orderkey"]["max"],
           mm["order_year"]["min"], mm["order_year"]["max"],
           count_manifest(path))],

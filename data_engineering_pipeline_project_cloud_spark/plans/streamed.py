@@ -10,6 +10,7 @@ same logic (SURVEY.md §5.5).
 from __future__ import annotations
 
 import tempfile
+import threading
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -43,6 +44,21 @@ def _source_bytes(*paths: str) -> int | None:
     return total or None
 
 
+#: serializes AvailableNow drains: each one overrides the session-global
+#: shuffle-partition count for its duration (see ``_drain``)
+_DRAIN_LOCK = threading.Lock()
+
+
+def _session_partitions(spark: SparkSession) -> int:
+    """The session's ``spark.sql.shuffle.partitions`` as an int; the
+    context's default parallelism when the key is unset or not a
+    number (e.g. ``"auto"``)."""
+    try:
+        return int(spark.conf.get("spark.sql.shuffle.partitions", None))
+    except (TypeError, ValueError):
+        return spark.sparkContext.defaultParallelism
+
+
 def _drain_partitions(spark: SparkSession, source_bytes: int | None) -> int:
     """Scale-adaptive state-partition count for an AvailableNow drain
     (guide §2.2: derive partition counts from input size, never a
@@ -60,7 +76,7 @@ def _drain_partitions(spark: SparkSession, source_bytes: int | None) -> int:
     stateful aggregation computes, only where keys live — output
     equality across counts is asserted in tests/test_streaming.py.
     """
-    sess = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    sess = _session_partitions(spark)
     if not source_bytes:
         return sess
     return int(max(1, min(sess, (source_bytes + (32 << 20) - 1) >> 25)))
@@ -72,17 +88,22 @@ def _drain(df: DataFrame, spark: SparkSession, mode: str = "complete",
 
     name = "q_" + uuid.uuid4().hex[:12]
     ckpt = tempfile.mkdtemp(prefix="ckpt_")
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions",
-                       str(_drain_partitions(spark, source_bytes)))
-        run_available_now(df, name, ckpt, output_mode=mode)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-        # the memory sink holds the drained rows; the checkpoint is
-        # only needed while the query runs — drop it so a long session
-        # doesn't accumulate one dir per drain
-        shutil.rmtree(ckpt, ignore_errors=True)
+    with _DRAIN_LOCK:
+        prev = spark.conf.get("spark.sql.shuffle.partitions")
+        try:
+            # the override is SESSION-global: the lock keeps concurrent
+            # drains from restoring each other's value, but any other
+            # query planned on this session during the drain sees the
+            # drain's partition count too
+            spark.conf.set("spark.sql.shuffle.partitions",
+                           str(_drain_partitions(spark, source_bytes)))
+            run_available_now(df, name, ckpt, output_mode=mode)
+        finally:
+            spark.conf.set("spark.sql.shuffle.partitions", prev)
+            # the memory sink holds the drained rows; the checkpoint is
+            # only needed while the query runs — drop it so a long
+            # session doesn't accumulate one dir per drain
+            shutil.rmtree(ckpt, ignore_errors=True)
     return spark.table(name)
 
 

@@ -108,6 +108,7 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import StructField, StructType
 
+from ..frames import local_frame
 from . import table_fs as _tfs
 
 MANIFEST_NAME = "manifest.json"
@@ -748,7 +749,7 @@ def add_check_constraint(spark, path: str, name: str,
     st = _table_schema(m)
     # analysis-time validation: unknown columns / bad SQL fail HERE,
     # with Spark's own error, not inside some future write
-    spark.createDataFrame([], st).filter(F.expr(expr)).schema
+    local_frame(spark, [], st).filter(F.expr(expr)).schema
     def violated() -> bool:
         return bool(read_manifest(spark, path).filter(
             ~F.coalesce(F.expr(expr), F.lit(True))).limit(1).count())
@@ -821,7 +822,7 @@ def set_column_default(spark, path: str, col: str,
         # DEFAULT must be column-free (ANSI): analyzing against a
         # zero-column frame rejects any column reference, and the cast
         # proves type compatibility up front
-        spark.createDataFrame([()], StructType([])).select(
+        local_frame(spark, [], StructType([])).select(
             F.expr(expr).cast(fields[col].dataType)).schema
     while True:
         prev = load_manifest(path)
@@ -915,11 +916,11 @@ def add_generated_column(spark, path: str, name: str, expr: str,
     # expression must analyze against the CURRENT schema (it may
     # reference any data column except itself)
     probe = StructType([f for f in st.fields if f.name != name])
-    typed = spark.createDataFrame([], probe).select(
+    typed = local_frame(spark, [], probe).select(
         F.expr(expr).alias(name))
     out_type = (st[name].dataType if exists
                 else typed.schema[name].dataType if dtype is None
-                else spark.createDataFrame([], probe).select(
+                else local_frame(spark, [], probe).select(
                     F.expr(expr).cast(dtype).alias(name))
                 .schema[name].dataType)
     def _disagrees() -> bool:
@@ -1478,6 +1479,29 @@ def _dv_decode(encoded: str, n_rows: int):
     return bits[:n_rows].astype(bool)
 
 
+def _dv_exclusion(spark, entries: list[dict]):
+    """``__file string, __pos long`` frame of every position the
+    entries' deletion vectors mask (``__file`` = data-file basename),
+    or None when nothing is masked.  Built column-wise from the
+    decoded numpy position arrays — one dictionary-encoded file column,
+    one int64 position column — and handed to the JVM whole."""
+    import numpy as np
+    import pyarrow as pa
+
+    masked = [f for f in entries if f.get("dv")]
+    pos = [np.flatnonzero(_dv_decode(f["dv"], f["rows"])) for f in masked]
+    counts = [len(p) for p in pos]
+    if not sum(counts):
+        return None
+    files = pa.DictionaryArray.from_arrays(
+        np.repeat(np.arange(len(masked), dtype=np.int32), counts),
+        pa.array([os.path.basename(f["path"]) for f in masked],
+                 pa.string()))
+    return local_frame(spark, {"__file": files,
+                               "__pos": np.concatenate(pos)},
+                       "__file string, __pos long")
+
+
 def _dv_encode(mask) -> str:
     """boolean numpy mask → base64 little-endian bitmap."""
     import base64
@@ -1776,7 +1800,7 @@ def create_declared_table(spark, path: str, schema: StructType, *,
     if properties.get("targetFileRows") is not None \
             and int(properties["targetFileRows"]) < 1:
         raise ValueError("targetFileRows must be >= 1")
-    empty = spark.createDataFrame([], schema)
+    empty = local_frame(spark, [], schema)
     for con in constraints:
         if con.get("check"):
             if not con.get("name"):
@@ -1801,7 +1825,7 @@ def create_declared_table(spark, path: str, schema: StructType, *,
                              "schema")
         # DEFAULT must be column-free (ANSI), same as
         # set_column_default
-        spark.createDataFrame([()], StructType([])).select(
+        local_frame(spark, [], StructType([])).select(
             F.expr(expr).cast(fields[col].dataType)).schema
     for col, expr in generated_cols.items():
         if col not in fields:
@@ -2230,7 +2254,6 @@ def _masked_spark_read_one(spark, st: StructType, entries: list[dict],
     which is bounded by the DV policy cap
     (``delete_vectors_from_manifest`` falls back to copy-on-write past
     it)."""
-    import numpy as np
     from pyspark.sql import functions as F
 
     def basename_col():
@@ -2239,14 +2262,11 @@ def _masked_spark_read_one(spark, st: StructType, entries: list[dict],
 
     paths = [_tfs.spark_path(f["path"]) for f in entries]
     base = spark.read.schema(st).parquet(*paths)
-    dead = [(os.path.basename(f["path"]), int(i))
-            for f in entries if f.get("dv")
-            for i in np.flatnonzero(_dv_decode(f["dv"], f["rows"]))]
-    if not dead:
+    excl = _dv_exclusion(spark, entries)
+    if excl is None:
         if tag_col:
             base = base.withColumn(tag_col, basename_col())
         return base
-    excl = spark.createDataFrame(dead, "__file string, __pos long")
     tagged = base.withColumn("__file", basename_col()).withColumn(
         "__pos", F.col("_metadata.row_index"))
     keep = [f.name for f in st.fields]
@@ -2341,7 +2361,7 @@ def read_manifest(spark, path: str, version: int | None = None,
     if special:
         parts.append(_masked_spark_read(spark, st, special))
     if not parts:
-        return spark.createDataFrame([], st)
+        return local_frame(spark, [], st)
     out = parts[0]
     for p in parts[1:]:
         out = out.unionAll(p)
@@ -2401,7 +2421,7 @@ def manifest_files(spark, path: str, version: int | None = None):
         StructField("added_at_version", LongType()),
         StructField("partition_json", StringType()),
     ])
-    return spark.createDataFrame(rows, schema)
+    return local_frame(spark, rows, schema)
 
 
 def describe_manifest(path: str, version: int | None = None) -> dict:
@@ -3098,7 +3118,7 @@ def merge_apply(source, path: str, key_cols: list[str],
     if paths:
         base = _masked_spark_read(spark, st, affected)
     else:
-        base = spark.createDataFrame([], st)
+        base = local_frame(spark, [], st)
 
     # ---- Delta's multi-match guard (cheap probe first) -------------
     if matched and paths:
@@ -3184,9 +3204,9 @@ def merge_apply(source, path: str, key_cols: list[str],
             tkeys = _masked_spark_read(spark, st, cand) \
                 .select(*key_cols)
         else:
-            tkeys = spark.createDataFrame(
-                [], StructType([f for f in st.fields
-                                if f.name in key_cols]))
+            tkeys = local_frame(
+                spark, [], StructType([f for f in st.fields
+                                       if f.name in key_cols]))
         sdf_i = source.alias(sa)
         on_i = reduce(lambda a, b: a & b,
                       [sdf_i[k].cast(types[k]) == tkeys[k]
@@ -3917,13 +3937,8 @@ def delete_vectors_from_manifest(keys, path: str, key_cols: list[str],
     # counts them against max_dv_rows, and repeated erasure batches
     # over overlapping keys can spuriously force the copy-on-write
     # fallback — paying a rewrite for rows that are already dead
-    import numpy as np
-
-    already = [(os.path.basename(f["path"]), int(i))
-               for f in affected if f.get("dv")
-               for i in np.flatnonzero(_dv_decode(f["dv"], f["rows"]))]
-    if already:
-        excl = spark.createDataFrame(already, "__file string, __pos long")
+    excl = _dv_exclusion(spark, affected)
+    if excl is not None:
         hits = hits.join(F.broadcast(excl), ["__file", "__pos"],
                          "left_anti")
     rows = hits.limit(max_dv_rows + 1).collect()
@@ -4097,34 +4112,10 @@ def delete_where_dv(spark, path: str, where: str,
     for p in hit_parts[1:]:
         hits = hits.unionAll(p)
     # positions earlier DV commits already deleted are EXCLUDED from
-    # the new mask — decoded DISTRIBUTED (round 10, r9 verdict nit):
-    # the driver ships each masked file's (small, RLE-ish encoded)
-    # bitmap string to the executors, which expand it to positions in
-    # Arrow batches.  Driver cost is O(files with masks), never
-    # O(total masked positions) — a table carrying heavy accumulated
-    # mask debt pays executors, not the planner.
-    dv_entries = [(os.path.basename(f["path"]), f["dv"],
-                   int(f["rows"])) for f in live if f.get("dv")]
-    if dv_entries:
-        import pandas as pd  # noqa: F401 (executor-side import below)
-
-        def _expand(batches):
-            import numpy as np
-            import pandas as pd
-
-            for pdf in batches:
-                for fname, dv, rows in zip(pdf["__file"], pdf["__dv"],
-                                           pdf["__rows"]):
-                    pos = np.flatnonzero(
-                        _dv_decode(dv, int(rows))).astype("int64")
-                    yield pd.DataFrame({
-                        "__file": np.repeat(fname, len(pos)),
-                        "__pos": pos})
-
-        excl = spark.createDataFrame(
-            dv_entries, "__file string, __dv string, __rows long"
-        ).repartition(min(len(dv_entries), 32)) \
-            .mapInPandas(_expand, "__file string, __pos long")
+    # the new mask — the same driver-decoded exclusion frame the read
+    # path builds (numpy bitmap decode, no Python worker)
+    excl = _dv_exclusion(spark, live)
+    if excl is not None:
         hits = hits.join(excl, ["__file", "__pos"], "left_anti")
     rows = hits.limit(max_dv_rows + 1).collect()
     if len(rows) > max_dv_rows:
@@ -4757,7 +4748,7 @@ def manifest_changes_incremental(spark, path: str, from_version: int,
 
     def side(entries: list[dict]):
         if not entries:
-            return spark.createDataFrame([], st)
+            return local_frame(spark, [], st)
         # explicit to-version schema: files from before an evolution
         # boundary NULL-fill the columns they predate, JVM-side;
         # deletion vectors mask inside the read

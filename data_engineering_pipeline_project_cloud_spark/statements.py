@@ -147,6 +147,8 @@ import re
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .frames import local_frame
+
 __all__ = ["graft_sql", "graft_sql_script", "split_statements"]
 
 # ---------------------------------------------------------------- lexer
@@ -427,7 +429,7 @@ def _summary(spark: SparkSession, operation: str, table: str,
         + [StructField(k, LongType(), True) for k in keys])
     row = (operation, table) + tuple(
         None if metrics[k] is None else int(metrics[k]) for k in keys)
-    return spark.createDataFrame([row], schema)
+    return local_frame(spark, [row], schema)
 
 
 def _live_stat_cols(m: dict) -> list[str]:
@@ -2367,8 +2369,9 @@ def _render_create_table(m: dict, ref: str,
 def _one_string_df(spark: SparkSession, col: str, val: str):
     from pyspark.sql.types import StringType, StructField, StructType
 
-    return spark.createDataFrame(
-        [(val,)], StructType([StructField(col, StringType(), False)]))
+    return local_frame(
+        spark, [(val,)],
+        StructType([StructField(col, StringType(), False)]))
 
 
 def _stmt_show(spark: SparkSession, p: _P) -> DataFrame:
@@ -2456,7 +2459,7 @@ def _stmt_show(spark: SparkSession, p: _P) -> DataFrame:
         rows = [(*k, a[0], a[1]) for k, a in agg.items()]
         rows.sort(key=lambda r: tuple((v is None, v or "")
                                       for v in r[:len(cols)]))
-        return spark.createDataFrame(rows, schema)
+        return local_frame(spark, rows, schema)
     if p.eat("COLUMNS"):
         from .sources.manifest_source import _table_schema, load_manifest
 
@@ -2469,8 +2472,8 @@ def _stmt_show(spark: SparkSession, p: _P) -> DataFrame:
         st = _table_schema(load_manifest(path))
         schema = StructType([StructField("col_name", StringType(),
                                          False)])
-        return spark.createDataFrame([(f.name,) for f in st.fields],
-                                     schema)
+        return local_frame(spark, [(f.name,) for f in st.fields],
+                           schema)
     if p.eat("TBLPROPERTIES"):
         from .sources.manifest_source import load_manifest
 
@@ -2498,10 +2501,10 @@ def _stmt_show(spark: SparkSession, p: _P) -> DataFrame:
                 raise ValueError(
                     f"table property {key!r} is not set "
                     f"(table has {sorted(props) or 'none'})")
-            return spark.createDataFrame(
-                [(key, str(props[key]))], schema)
-        return spark.createDataFrame(
-            sorted((str(k), str(v)) for k, v in props.items()),
+            return local_frame(spark, [(key, str(props[key]))],
+                               schema)
+        return local_frame(
+            spark, sorted((str(k), str(v)) for k, v in props.items()),
             schema)
     views_only = p.eat("VIEWS")
     if not views_only:
@@ -2517,9 +2520,9 @@ def _stmt_show(spark: SparkSession, p: _P) -> DataFrame:
     ])
     rows = [r for r in list_tables(spark)
             if not views_only or r["kind"] == "view"]
-    return spark.createDataFrame(
-        [(r["name"], r["kind"], r["location"], r["managed"])
-         for r in rows], schema)
+    return local_frame(
+        spark, [(r["name"], r["kind"], r["location"], r["managed"])
+                for r in rows], schema)
 
 
 def _stmt_comment(spark: SparkSession, p: _P) -> DataFrame:
@@ -2895,7 +2898,7 @@ def _stmt_describe(spark: SparkSession, p: _P) -> DataFrame:
                      float(g["committedAt"])
                      if g.get("committedAt") is not None else None)
                     for g in group_history(path)]
-            return spark.createDataFrame(data, schema) \
+            return local_frame(spark, data, schema) \
                 .orderBy("version", ascending=False)
         rows = manifest_operations(path)
         schema = StructType([
@@ -2910,7 +2913,7 @@ def _stmt_describe(spark: SparkSession, p: _P) -> DataFrame:
                  float(r["committedAt"])
                  if r.get("committedAt") is not None else None)
                 for r in rows]
-        return spark.createDataFrame(data, schema) \
+        return local_frame(spark, data, schema) \
             .orderBy("version", ascending=False)
     if p.eat("DETAIL"):
         path = p.table()
@@ -2933,7 +2936,7 @@ def _stmt_describe(spark: SparkSession, p: _P) -> DataFrame:
                json.dumps(d["constraints"], sort_keys=True),
                json.dumps(d["properties"], sort_keys=True),
                json.dumps(d["schemaFields"]))
-        return spark.createDataFrame([row], schema)
+        return local_frame(spark, [row], schema)
     # plain DESCRIBE [TABLE] <t>: the column listing (ANSI/Spark
     # DESCRIBE), annotated with defaults and generated expressions
     from .sources.manifest_source import _table_schema, load_manifest
@@ -3004,7 +3007,7 @@ def _stmt_describe(spark: SparkSession, p: _P) -> DataFrame:
                 ("Retained Versions", json.dumps(
                     d["retainedVersions"]))):
             rows.append((key, str(val), "", None, None))
-    return spark.createDataFrame(rows, schema)
+    return local_frame(spark, rows, schema)
 
 
 def _stmt_restore(spark: SparkSession, p: _P) -> DataFrame:

@@ -340,6 +340,79 @@ def test_drain_partitions_scale_adaptive(spark):
     assert _drain_partitions(spark, 1 << 40) == sess       # 1 TB → clamped
 
 
+class _StubConf:
+    def __init__(self, value):
+        self.value = value
+
+    def get(self, key, default=None):
+        assert key == "spark.sql.shuffle.partitions"
+        return default if self.value is None else self.value
+
+    def set(self, key, value):
+        assert key == "spark.sql.shuffle.partitions"
+        self.value = value
+
+
+class _StubSpark:
+    """Just the conf and context surface the drain helpers touch."""
+
+    def __init__(self, partitions):
+        from types import SimpleNamespace
+
+        self.conf = _StubConf(partitions)
+        self.sparkContext = SimpleNamespace(defaultParallelism=3)
+
+    def table(self, name):
+        return name
+
+
+@pytest.mark.parametrize("setting", [None, "auto", ""])
+def test_drain_partitions_fall_back_to_default_parallelism(setting):
+    """An unset or non-numeric ``spark.sql.shuffle.partitions`` (e.g.
+    ``"auto"``) falls back to the context's default parallelism."""
+    from data_engineering_pipeline_project_cloud_spark.plans.streamed import (
+        _drain_partitions,
+    )
+
+    spark = _StubSpark(setting)
+    assert _drain_partitions(spark, None) == 3
+    assert _drain_partitions(spark, 1) == 1
+    assert _drain_partitions(spark, 1 << 40) == 3
+    assert _drain_partitions(_StubSpark("6"), 1 << 40) == 6
+
+
+def test_drains_are_serialized_and_restore_setting(monkeypatch):
+    """Concurrent drains never overlap: each one's session-global
+    partition override is restored before the next one sets its own."""
+    import threading
+    import time
+
+    from data_engineering_pipeline_project_cloud_spark.plans import streamed
+
+    spark = _StubSpark("7")
+    active, seen, lock = [0], [], threading.Lock()
+
+    def fake_run(df, name, ckpt, output_mode):
+        with lock:
+            active[0] += 1
+            seen.append((active[0], spark.conf.value))
+        time.sleep(0.05)
+        with lock:
+            active[0] -= 1
+
+    monkeypatch.setattr(streamed, "run_available_now", fake_run)
+    threads = [threading.Thread(target=streamed._drain,
+                                args=(None, spark), kwargs={
+                                    "source_bytes": 1})
+               for _ in range(4)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join()
+    assert seen == [(1, "1")] * 4
+    assert spark.conf.value == "7"
+
+
 def test_stateful_drain_output_independent_of_partition_count(
         spark, sf_dir, events_stream, tmp_path):
     """State-partition count decides WHERE keys live, never what the
